@@ -198,6 +198,4 @@ final class IntArrayList(initialCapacity: Int = 16) {
     n += 1
   }
   def toArray: Array[Int] = java.util.Arrays.copyOf(arr, n)
-  /** Direct backing array access; valid for indices < size. */
-  def unsafeArray: Array[Int] = arr
 }

@@ -163,11 +163,4 @@ object DistStats {
     Stats(mean, vari, sorted(0).toDouble, sorted(sorted.length - 1).toDouble,
       scaledEntropyLongs(sorted))
   }
-
-  def ofInts(values: Array[Int]): Stats = {
-    val longs = new Array[Long](values.length)
-    var i = 0
-    while (i < values.length) { longs(i) = values(i).toLong; i += 1 }
-    ofLongs(longs)
-  }
 }

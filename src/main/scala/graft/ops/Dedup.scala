@@ -201,53 +201,82 @@ object Dedup {
       .drop("_sd_id", "_sd_drops")
   }
 
-  /** Band/bucket explosion of a (_id, _sig) frame: (band, bucket, id) —
-    * the band key is a hash of the band's signature slice. Shared by every
-    * LSH path so banding stays bit-identical across batch / incremental /
-    * pre-materialized entry points.
+  /** LSH band keys of a (_id, _sig) frame, one row per document:
+    * (_id, _bk) where `_bk(b)` = xxhash64(band b's signature slice, b) is
+    * the document's bucket in band b. Shared by every LSH path so banding
+    * stays bit-identical across batch / incremental / pre-materialized
+    * entry points.
+    *
+    * Scale shape: signature and band keys are computed once per document.
+    * The keys are a plain array of codegen'd hashes, not a
+    * `transform(sequence(...))` lambda: Catalyst inlines a computed `_sig`
+    * into a lambda body (one signature kernel call PER BAND), whereas
+    * numBands direct references keep CollapseProject from merging the
+    * signature projection into this one.
     */
-  private def bandedFromSigs(sigs: DataFrame, numBands: Int,
-                             rowsPerBand: Int): DataFrame =
-    sigs.select(col("_id"),
-        posexplode(transform(sequence(lit(0), lit(numBands - 1)), b =>
-          xxhash64(slice(col("_sig"), b * rowsPerBand + 1, lit(rowsPerBand)), b)))
-          .as(Seq("_band", "_bucket")))
+  private[ops] def bandKeys(sigs: DataFrame, numHashes: Int,
+                            numBands: Int): DataFrame = {
+    val rowsPerBand = numHashes / numBands
+    sigs.select(col("_id"), array((0 until numBands).map(b =>
+      xxhash64(slice(col("_sig"), b * rowsPerBand + 1, rowsPerBand), lit(b))): _*)
+      .as("_bk"))
+  }
+
+  /** [[bandKeys]] of a (_sid, _sh) shingle projection: the signature
+    * derives from the shingle array (bit-identical to `minhash_signature`
+    * of the text).
+    */
+  private def shingleBandKeys(pre: DataFrame, numHashes: Int,
+                              numBands: Int): DataFrame =
+    bandKeys(pre.select(col("_sid").as("_id"),
+      minhash_from_shingles(col("_sh"), numHashes).as("_sig")), numHashes, numBands)
+
+  /** One (_band, _bucket, _id) row per document and band of a key frame. */
+  private def bandRows(keys: DataFrame): DataFrame =
+    keys.select(col("_id"), posexplode(col("_bk")).as(Seq("_band", "_bucket")))
       .select(col("_band"), col("_bucket"), col("_id"))
+
+  /** LSH candidate pairs (id_a < id_b, distinct) sharing any
+    * (band, bucket). The key frame is materialized once (localCheckpoint,
+    * one slim row per document) and both sides of the self-join explode
+    * it, so neither side re-runs the signature kernel. The join is
+    * skew-bounded: a bucket only contains near-identical docs by
+    * construction.
+    */
+  private def lshCandidates(keys: DataFrame): DataFrame = {
+    val banded = bandRows(keys.localCheckpoint())
+    val a = banded.select(col("_band"), col("_bucket"), col("_id").as("id_a"))
+    val b = banded.select(col("_band"), col("_bucket"), col("_id").as("id_b"))
+    a.join(b, Seq("_band", "_bucket"))
+      .where(col("id_a") < col("id_b"))
+      .select(col("id_a"), col("id_b"))
+      .distinct()
+  }
 
   /** MinHash + LSH near-duplicate PAIRS: (id_a, id_b, est_jaccard) with
     * est_jaccard >= threshold. numBands divides numHashes; rowsPerBand =
     * numHashes/numBands controls the S-curve.
     *
-    * Shape (guide §2.3/§8 — decide with small rows, attach payloads once):
-    * the signature pass is materialized ONCE (localCheckpoint, shard of
-    * (id, 8·numHashes bytes)); the bucket self-join carries only
-    * (band, bucket, id) — the previous shape dragged the full signature
-    * array through BOTH sides of the exchange, numBands copies each — and
-    * the signatures are re-attached by id to the candidate-bounded distinct
-    * pair set for the estimate.
+    * Scale shape (decide with small rows, attach payloads once):
+    * signatures and band keys are computed once per document — the
+    * signature pass is materialized (localCheckpoint, shard of
+    * (id, 8·numHashes bytes)) and so is its slim (id, band keys) frame
+    * ([[lshCandidates]]); the bucket self-join carries only
+    * (band, bucket, id), and the signatures are re-attached by id to the
+    * candidate-bounded distinct pair set for the estimate.
     */
   def minHashPairs(df0: DataFrame, idCol: String, textCol: String,
                    numHashes: Int = 128, numBands: Int = 32,
                    threshold: Double = 0.7, shingleSize: Int = 5): DataFrame = {
     require(numHashes % numBands == 0, "numBands must divide numHashes")
-    val rowsPerBand = numHashes / numBands
     val df = Fanout.ensure(df0)
     val sigs = df.select(col(idCol).as("_id"),
       minhash_signature(col(textCol), numHashes, shingleSize).as("_sig"))
       .localCheckpoint()
-
-    val banded = bandedFromSigs(sigs, numBands, rowsPerBand)
-    // self-join within (band, bucket); skew-bounded: a bucket only contains
-    // near-identical docs by construction. distinct BEFORE the estimate:
-    // est_jaccard is a function of (id_a, id_b), so collapsing multi-band
-    // agreement first computes it once per pair, not once per shared band.
-    val a = banded.select(col("_band"), col("_bucket"), col("_id").as("id_a"))
-    val b = banded.select(col("_band"), col("_bucket"), col("_id").as("id_b"))
-    val cands = a.join(b, Seq("_band", "_bucket"))
-      .where(col("id_a") < col("id_b"))
-      .select(col("id_a"), col("id_b"))
-      .distinct()
-    cands
+    // candidates are distinct BEFORE the estimate: est_jaccard is a
+    // function of (id_a, id_b), so collapsing multi-band agreement first
+    // computes it once per pair, not once per shared band
+    lshCandidates(bandKeys(sigs, numHashes, numBands))
       .join(sigs.select(col("_id").as("id_a"), col("_sig").as("_sig_a")), Seq("id_a"))
       .join(sigs.select(col("_id").as("id_b"), col("_sig").as("_sig_b")), Seq("id_b"))
       .select(col("id_a"), col("id_b"),
@@ -681,8 +710,10 @@ object Dedup {
     * canonical row (exactly one per cluster), so `where(col("kept"))` IS
     * the deduplicated corpus and the rest is the audit trail.
     *
-    * Scale shape: the text reduces to signatures/shingle arrays before
-    * anything wide; pairs are bucket-join-bounded; CC runs on the
+    * Scale shape: the text reduces to shingle arrays before anything
+    * wide; signatures and band keys are computed once per document (one
+    * materialized (id, band keys) row each, exploded by both sides of the
+    * bucket self-join); pairs are bucket-join-bounded; CC runs on the
     * pair-graph (dup-sized, not corpus-sized); the final join-back
     * attaches labels to the corpus by id only. The cluster-size aggregate
     * is label-sized.
@@ -704,6 +735,22 @@ object Dedup {
     nearDupDedupPre(df, pre, idCol, numHashes, numBands, jaccard, keepByCol)
   }
 
+  /** LSH candidate generation + exact shingle-Jaccard verify from a
+    * pre-materialized (_sid, _sh) projection — the shared pair stage of
+    * [[nearDupDedupPre]] and the q48 dup-cluster query (which previously
+    * re-ran the shingle kernel three times: once inside minHashPairs and
+    * once per verify join side). Each document is signed and banded once
+    * ([[lshCandidates]]). Output: verified (id_a, id_b).
+    */
+  private[graft] def verifiedPairsPre(pre: DataFrame, numHashes: Int,
+                                      numBands: Int, jaccard: Double): DataFrame =
+    lshCandidates(shingleBandKeys(pre, numHashes, numBands))
+      .join(pre.select(col("_sid").as("id_a"), col("_sh").as("_sa")), Seq("id_a"))
+      .join(pre.select(col("_sid").as("id_b"), col("_sh").as("_sb")), Seq("id_b"))
+      .where(size(col("_sa")) > 0 && size(col("_sb")) > 0 &&
+        jaccard_sorted(col("_sa"), col("_sb")) >= jaccard)
+      .select(col("id_a"), col("id_b"))
+
   /** [[nearDupDedup]] from a PRE-materialized (_sid, _sh) shingle
     * projection — the entry point [[nearDupIncremental]] uses so the
     * within-shard dedup reuses the shard's one shingling pass instead of
@@ -713,35 +760,8 @@ object Dedup {
     * at banding threshold 0 is the set of pairs sharing any
     * (band, bucket) — the est_jaccard >= 0 filter the old path applied
     * was vacuous there (the estimate is a non-null fraction whenever both
-    * signatures exist, and a null signature never enters a bucket).
+    * signatures exist).
     */
-  /** LSH candidate generation + exact shingle-Jaccard verify from a
-    * pre-materialized (_sid, _sh) projection — the shared pair stage of
-    * [[nearDupDedupPre]] and the q48 dup-cluster query (which previously
-    * re-ran the shingle kernel three times: once inside minHashPairs and
-    * once per verify join side). Output: verified (id_a, id_b).
-    */
-  private[graft] def verifiedPairsPre(pre: DataFrame, numHashes: Int,
-                                      numBands: Int, jaccard: Double): DataFrame = {
-    val rowsPerBand = numHashes / numBands
-    val banded = bandedFromSigs(
-      pre.select(col("_sid").as("_id"),
-        minhash_from_shingles(col("_sh"), numHashes).as("_sig")),
-      numBands, rowsPerBand)
-    val a = banded.select(col("_band"), col("_bucket"), col("_id").as("id_a"))
-    val b = banded.select(col("_band"), col("_bucket"), col("_id").as("id_b"))
-    val cands = a.join(b, Seq("_band", "_bucket"))
-      .where(col("id_a") < col("id_b"))
-      .select(col("id_a"), col("id_b"))
-      .distinct()
-    cands
-      .join(pre.select(col("_sid").as("id_a"), col("_sh").as("_sa")), Seq("id_a"))
-      .join(pre.select(col("_sid").as("id_b"), col("_sh").as("_sb")), Seq("id_b"))
-      .where(size(col("_sa")) > 0 && size(col("_sb")) > 0 &&
-        jaccard_sorted(col("_sa"), col("_sb")) >= jaccard)
-      .select(col("id_a"), col("id_b"))
-  }
-
   private[ops] def nearDupDedupPre(df: DataFrame, pre: DataFrame,
                                    idCol: String, numHashes: Int,
                                    numBands: Int, jaccard: Double,
@@ -871,7 +891,6 @@ object Dedup {
                          numHashes: Int = 128, numBands: Int = 32,
                          shingleSize: Int = 5, jaccard: Double = 0.8): DataFrame = {
     require(numHashes % numBands == 0, "numBands must divide numHashes")
-    val rowsPerBand = numHashes / numBands
     // ONE tokenization/shingling pass over the SHARD, materialized
     // (localCheckpoint, shard-sized (id, shingles)): banding signatures
     // derive from the shingle array (bit-identical TextKernels factoring),
@@ -886,10 +905,7 @@ object Dedup {
     val preIn = Fanout.ensure(incoming).select(col(idCol).as("_sid"),
       shingles(col(textCol), shingleSize).as("_sh"))
       .localCheckpoint()
-    def bandedPre(pre: DataFrame) = bandedFromSigs(
-      pre.select(col("_sid").as("_id"),
-        minhash_from_shingles(col("_sh"), numHashes).as("_sig")),
-      numBands, rowsPerBand)
+    def bandedPre(pre: DataFrame) = bandRows(shingleBandKeys(pre, numHashes, numBands))
     val fanLedger = Fanout.ensure(ledger)
     val preLedBand = fanLedger.select(col(idCol).as("_sid"),
       shingles(col(textCol), shingleSize).as("_sh"))

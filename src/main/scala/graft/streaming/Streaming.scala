@@ -24,17 +24,6 @@ object Streaming {
   def extractStream(pages: DataFrame): DataFrame =
     FeatureJob.extractStage(pages)
 
-  /** Tumbling-window per-language throughput/quality aggregates. */
-  def windowedStats(pages: DataFrame, watermarkDelay: String = "1 hour",
-                    window: String = "1 hour"): DataFrame =
-    extractStream(pages)
-      .withWatermark("warc_ts", watermarkDelay)
-      .groupBy(org.apache.spark.sql.functions.window(col("warc_ts"), window), col("lang"))
-      .agg(
-        count(lit(1)).as("pages"),
-        sum(when(col("status") === "ok", 1).otherwise(0)).as("ok_pages"),
-        approx_count_distinct(col("instance_id")).as("distinct_instances"))
-
   /** Tumbling-window distinct-cardinality estimate with the mergeable HLL
     * sketch as STREAMING STATE: the TypedImperativeAggregate's binary
     * register buffer lives in the state store and MERGES across

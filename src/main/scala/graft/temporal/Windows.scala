@@ -51,15 +51,6 @@ object Windows {
       .withColumn(s"${c}_roll${k}_max", max(col(c)).over(w))
   }
 
-  /** W3b: rolling stats over a trailing time range (seconds, inclusive). */
-  def rollingByRange(df: DataFrame, keys: Seq[String], ts: String, c: String, seconds: Long): DataFrame = {
-    val w = Window.partitionBy(keys.map(col): _*)
-      .orderBy(epochSeconds(col(ts)))
-      .rangeBetween(-seconds, 0)
-    df.withColumn(s"${c}_roll${seconds}s_mean", avg(col(c)).over(w))
-      .withColumn(s"${c}_roll${seconds}s_count", count(col(c)).over(w))
-  }
-
   /** W4: gap-based sessionization of crawl revisits — a new session starts
     * when the gap to the previous revisit exceeds `gapSeconds`. Adds
     * `session_no` (0-based per key) and a deterministic `session_id`.
@@ -89,12 +80,6 @@ object Windows {
   def latestSnapshot(df: DataFrame, keys: Seq[String], ts: String): DataFrame = {
     val w = Window.partitionBy(keys.map(col): _*).orderBy(col(ts).desc)
     df.withColumn("_rn", row_number().over(w)).where(col("_rn") === 1).drop("_rn")
-  }
-
-  /** Rank-n snapshot per key (n=1 is latestSnapshot). */
-  def nthSnapshot(df: DataFrame, keys: Seq[String], ts: String, n: Int): DataFrame = {
-    val w = Window.partitionBy(keys.map(col): _*).orderBy(col(ts).desc)
-    df.withColumn("_rn", row_number().over(w)).where(col("_rn") === n).drop("_rn")
   }
 
   /** Revisit CHANGE DETECTION: per key (url), how different is each crawl

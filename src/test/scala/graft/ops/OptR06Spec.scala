@@ -158,6 +158,97 @@ class OptR06Spec extends SparkSpec {
     assert(statuses == Map(10L -> "ledger_dup", 11L -> "kept", 12L -> "shard_dup"))
   }
 
+  // ---- band keys: one array per document ≡ the posexplode(transform) banding ----
+
+  test("bandKeys ≡ the posexplode(transform(sequence)) banding, incl. empty/null shingles") {
+    val rnd = new scala.util.Random(7)
+    for ((nh, nb) <- Seq((128, 32), (64, 32), (16, 4), (12, 3))) {
+      val r = nh / nb
+      val raw = Seq.tabulate(40)(i => (i.toLong, Seq.fill(nh)(rnd.nextLong())))
+        .toDF("_id", "_sig")
+      val shingled = (Seq.tabulate(20)(i =>
+          (100L + i, Option(Seq.fill(rnd.nextInt(50))(rnd.nextLong())))) ++
+        Seq((200L, Some(Seq.empty[Long])), (201L, None)))
+        .toDF("_id", "_sh")
+        .select(col("_id"), minhash_from_shingles(col("_sh"), nh).as("_sig"))
+      val sigs = raw.unionByName(shingled)
+      val lambda = sigs.select(col("_id"),
+          posexplode(transform(sequence(lit(0), lit(nb - 1)), b =>
+            xxhash64(slice(col("_sig"), b * r + 1, lit(r)), b)))
+            .as(Seq("_band", "_bucket")))
+      val keys = Dedup.bandKeys(sigs, nh, nb)
+        .select(col("_id"), posexplode(col("_bk")).as(Seq("_band", "_bucket")))
+      def rows(df: org.apache.spark.sql.DataFrame) =
+        df.collect().map(x => (x.getLong(0), x.getInt(1), x.getLong(2))).sorted.toSeq
+      val (want, got) = (rows(lambda), rows(keys))
+      assert(want.size == 62 * nb, s"nh=$nh nb=$nb: ${want.size} lambda rows")
+      assert(got == want, s"nh=$nh nb=$nb: band keys differ from the lambda banding")
+    }
+  }
+
+  // fixed near-dup fixture: six random 60-word bases, one 1-word and one
+  // 2-word edit of each, exact copies of two bases, two empty texts and a
+  // null text
+  private lazy val nearDupDocs: Seq[(Long, String)] = {
+    val rnd = new scala.util.Random(20261017L)
+    val vocab = Array.tabulate(40)(i => s"w$i")
+    val bases = Seq.fill(6)(Vector.fill(60)(vocab(rnd.nextInt(vocab.length))))
+    def edit(ws: Vector[String], n: Int) =
+      (1 to n).foldLeft(ws)((w, _) => w.updated(rnd.nextInt(w.length), "edit"))
+    val texts = bases ++ bases.map(edit(_, 1)) ++ bases.map(edit(_, 2)) ++ bases.take(2)
+    texts.map(_.mkString(" ")).zipWithIndex.map { case (t, i) => (i + 1L, t) } ++
+      Seq((21L, ""), (22L, ""), (23L, null))
+  }
+
+  /** Rendered rows of the four LSH entry points on the fixture, sorted. */
+  private def lshFixtureRows(): Map[String, Seq[String]] = {
+    val docs = nearDupDocs.toDF("id", "text")
+    val scored = docs.withColumn("quality", length(col("text")).cast("long"))
+    def render(df: org.apache.spark.sql.DataFrame): Seq[String] =
+      df.collect().map(_.toSeq.map(v => String.valueOf(v)).mkString(":")).toSeq.sorted
+    val ledger = docs.where(col("id") <= 6L)
+    val incoming = docs.where(col("id") > 6L)
+      .unionByName(Seq((30L, "novel text about something else entirely here and there"),
+        (31L, "novel text about something else entirely here and there")).toDF("id", "text"))
+    Map(
+      "minHashPairs" -> render(Dedup.minHashPairs(docs, "id", "text", threshold = 0.5)),
+      "nearDupDedup" -> render(Dedup.nearDupDedup(docs, "id", "text")),
+      "nearDupDedup/keepBy" -> render(Dedup.nearDupDedup(scored, "id", "text",
+        keepByCol = Some("quality"))),
+      "nearDupIncremental" -> render(Dedup.nearDupIncremental(incoming, ledger, "id", "text")))
+  }
+
+  // rendered rows the banding-through-a-lambda implementation produced on
+  // the fixture (sorted as strings)
+  private val lshFixtureExpected: Map[String, Seq[String]] = Map(
+    "minHashPairs" -> Seq(
+      "10:16:0.609375", "11:17:0.734375", "12:18:0.546875", "13:19:0.671875", "14:20:0.7734375",
+      "1:13:0.671875", "1:19:1.0", "1:7:0.828125", "21:22:1.0", "2:14:0.7734375",
+      "2:20:1.0", "2:8:0.8046875", "3:15:0.7421875", "3:9:0.7734375", "4:10:0.8359375",
+      "4:16:0.7109375", "5:11:0.8359375", "5:17:0.8359375", "6:12:0.828125", "6:18:0.671875",
+      "7:13:0.53125", "7:19:0.828125", "8:14:0.6640625", "8:20:0.8046875", "9:15:0.5546875"),
+    "nearDupDedup" -> Seq(
+      "10:4:2:false", "11:5:3:false", "12:6:2:false", "13:13:1:true", "14:14:1:true", "15:15:1:true",
+      "16:16:1:true", "17:5:3:false", "18:18:1:true", "19:1:3:false", "1:1:3:true", "20:2:3:false",
+      "21:21:1:true", "22:22:1:true", "23:23:1:true", "2:2:3:true", "3:3:2:true", "4:4:2:true",
+      "5:5:3:true", "6:6:2:true", "7:1:3:false", "8:2:3:false", "9:3:2:false"),
+    "nearDupDedup/keepBy" -> Seq(
+      "10:4:2:true", "11:5:3:true", "12:6:2:true", "13:13:1:true", "14:14:1:true", "15:15:1:true",
+      "16:16:1:true", "17:5:3:false", "18:18:1:true", "19:1:3:false", "1:1:3:false", "20:2:3:false",
+      "21:21:1:true", "22:22:1:true", "23:23:1:true", "2:2:3:false", "3:3:2:false", "4:4:2:false",
+      "5:5:3:false", "6:6:2:false", "7:1:3:true", "8:2:3:true", "9:3:2:true"),
+    "nearDupIncremental" -> Seq(
+      "10:ledger_dup:4", "11:ledger_dup:5", "12:ledger_dup:6", "13:kept:null", "14:kept:null",
+      "15:kept:null", "16:kept:null", "17:ledger_dup:5", "18:kept:null", "19:ledger_dup:1",
+      "20:ledger_dup:2", "21:kept:null", "22:kept:null", "23:kept:null", "30:kept:null",
+      "31:shard_dup:30", "7:ledger_dup:1", "8:ledger_dup:2", "9:ledger_dup:3"))
+
+  test("minHashPairs / nearDupDedup (± keepBy) / nearDupIncremental rows unchanged on a fixed fixture") {
+    val got = lshFixtureRows()
+    for ((k, want) <- lshFixtureExpected)
+      assert(got(k) == want, s"$k:\n got ${got(k)}\nwant $want")
+  }
+
   // ---- ring successor lookup ≡ the SQL it replaced ----
 
   test("RingLookup.successor equals the filter/array_min SQL formulation") {

@@ -1,7 +1,16 @@
 package graft.ops
 
+import java.util.concurrent.ConcurrentLinkedQueue
+import scala.jdk.CollectionConverters._
+
+import org.apache.spark.ListenerDrain
+import org.apache.spark.sql.catalyst.expressions.{Expression, LambdaFunction, XxHash64}
+import org.apache.spark.sql.execution.{QueryExecution, SparkPlan}
+import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanHelper
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.util.QueryExecutionListener
 import graft.SparkSpec
+import graft.functions.MinHashFromShingles
 
 /** Physical-plan shape assertions for the round-4 operators — the scaladoc
   * scale claims ("zero shuffle", "broadcast vocab", "one exchange") pinned
@@ -58,6 +67,55 @@ class PlanShapeSpec extends SparkSpec {
     assert(shuffles(plan) == 1, s"expected exactly one shuffle:\n$plan")
     assert("simhash64_md5".r.findAllIn(plan).size <= 1,
       s"simhash evaluated more than once:\n$plan")
+  }
+
+  /** Executed plans of every SQL execution `body` runs, eager checkpoint
+    * jobs included — an operator that materializes an intermediate frame
+    * evaluates its kernels in a plan the output DataFrame no longer shows.
+    */
+  private def executedPlans(body: => Unit): Seq[SparkPlan] = {
+    val plans = new ConcurrentLinkedQueue[SparkPlan]()
+    val listener = new QueryExecutionListener {
+      def onSuccess(funcName: String, qe: QueryExecution, durationNs: Long): Unit =
+        plans.add(qe.executedPlan)
+      def onFailure(funcName: String, qe: QueryExecution, e: Exception): Unit = ()
+    }
+    ListenerDrain.drain(spark.sparkContext)
+    spark.listenerManager.register(listener)
+    try { body; ListenerDrain.drain(spark.sparkContext) }
+    finally spark.listenerManager.unregister(listener)
+    plans.asScala.toSeq
+  }
+
+  private object Stages extends AdaptiveSparkPlanHelper
+
+  /** Every expression tree of every operator of `plans`, AQE stages and
+    * subqueries included.
+    */
+  private def planExpressions(plans: Seq[SparkPlan]): Seq[Expression] =
+    plans.flatMap(p => Stages.collectWithSubqueries(p) { case n => n.expressions }.flatten)
+
+  private def assertSignedOnce(what: String, plans: Seq[SparkPlan]): Unit = {
+    val exprs = planExpressions(plans)
+    val signs = exprs.map(_.collect { case m: MinHashFromShingles => m }.size).sum
+    assert(signs == 1,
+      s"$what: minhash_from_shingles evaluated in $signs places:\n${plans.mkString("\n")}")
+    val lambdaBanding = exprs.filter(e =>
+      e.exists(_.isInstanceOf[XxHash64]) && e.exists(_.isInstanceOf[LambdaFunction]))
+    assert(lambdaBanding.isEmpty, s"$what: banding through a lambda:\n${lambdaBanding.mkString("\n")}")
+  }
+
+  test("near-dup pair stage signs and bands each document once (no lambda banding)") {
+    val df = Seq.tabulate(40)(i =>
+      (i.toLong, s"doc ${i % 10} shares most of these words with its copies ${i / 10}"))
+      .toDF("id", "text")
+    val pre = df.select(col("id").as("_sid"), graft.functions.shingles(col("text"), 3).as("_sh"))
+      .localCheckpoint()
+    assertSignedOnce("verifiedPairsPre",
+      executedPlans(Dedup.verifiedPairsPre(pre, 64, 32, 0.5).collect()))
+    assertSignedOnce("nearDupDedup", executedPlans(
+      Dedup.nearDupDedup(df, "id", "text", numHashes = 64, numBands = 32,
+        shingleSize = 3, jaccard = 0.5).collect()))
   }
 
   test("extractAnchors is a pure narrow projection (zero Exchange)") {
