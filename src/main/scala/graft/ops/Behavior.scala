@@ -441,21 +441,11 @@ object Behavior {
       .select(col("from_type"), col("to_type"), col("n"))
       .localCheckpoint()
     val tots = m.groupBy(col("from_type")).agg(sum(col("n")).as("_tot"))
-    // SIZE-ADAPTIVE DISPATCH (the Dedup.clusters probe pattern): the
-    // transition matrix is state-pair-sized and already a materialized
-    // leaf; under the driver bound the SAME integer power iteration
-    // (per-edge pi·n div tot, summed per target; outgoing-less states keep
-    // their mass) replays locally instead of iters join rounds.
-    val sdLocalMax = df.sparkSession.conf
-      .getOption("spark.graft.graph.localEdgeThreshold").map(_.toLong)
-      .getOrElse(4L << 20)
-    val sdProbe = m.agg(count(lit(1)), count(col("from_type")),
-      count(col("to_type")), count(col("n"))).head()
-    if (sdProbe.getLong(0) <= sdLocalMax && (1 to 3).forall(i =>
-        sdProbe.getLong(i) == sdProbe.getLong(0))) {
+    // local replay: the integer power iteration of the loop below, op for op
+    for (rows <- LocalDispatch.collectIfSmall(m)) {
       val spark = df.sparkSession
       import spark.implicits._
-      val es = m.collect().map(r => (r.getString(0), r.getString(1), r.getLong(2)))
+      val es = rows.map(r => (r.getString(0), r.getString(1), r.getLong(2)))
       val tot = new java.util.HashMap[String, java.lang.Long]()
       es.foreach { case (f, _, n) => tot.merge(f, n, (a, b) => a + b) }
       val sts = (es.map(_._1) ++ es.map(_._2)).distinct

@@ -560,8 +560,8 @@ object Dedup {
   }
 
   /** Connected components over duplicate pairs: iterative min-label
-    * propagation PLUS pointer jumping, until fixpoint or maxIters. Returns
-    * (id, cluster_id).
+    * propagation PLUS pointer jumping, until fixpoint or maxIters — on
+    * both dispatch paths. Returns (id, cluster_id).
     *
     * Each round a node adopts min(self, min over neighbors, label-of-label):
     * the neighbor step is classic min-label propagation; the label-of-label
@@ -569,12 +569,16 @@ object Dedup {
     * minima, so following one parent pointer per round halves the remaining
     * path length — the same doubling that makes large-star/small-star
     * converge in O(log diameter) instead of O(diameter) on chain-shaped dup
-    * graphs; ClustersSpec proves a 64-node path converges in <= 7 rounds).
+    * graphs; OpsSpec pins a 64-node path converging in <= 7 rounds).
+    * Both dispatch paths stop at the fixpoint or after `maxIters` rounds,
+    * so a component the cap cuts short keeps the labels of its last round.
     *
     * Cost shape per round: two label-sized joins + ONE Spark job — the
     * convergence flag rides the same aggregate action that materializes the
     * round's persist (the previous formulation ran an extra join +
-    * limit(1).count() job per round just to test convergence).
+    * limit(1).count() job per round just to test convergence). Under the
+    * [[LocalDispatch]] bound with integral ids the same rounds replay on
+    * the driver ([[replayClusters]]).
     */
   def clusters(pairs: DataFrame, idA: String = "id_a", idB: String = "id_b",
                maxIters: Int = 10): DataFrame = {
@@ -582,69 +586,13 @@ object Dedup {
       .unionByName(pairs.select(col(idB).as("a"), col(idA).as("b")))
       .distinct()
       .persist()
-    // SIZE-ADAPTIVE DISPATCH (the bpeTrain localization-probe pattern): the
-    // dup GRAPH is pair-sized, not corpus-sized — after banding/verify it is
-    // typically orders of magnitude smaller than the corpus. When it fits
-    // the documented driver bound, a driver-local union-find computes the
-    // identical min-label-per-component answer in one pass instead of
-    // O(log diameter) join rounds; past the bound the distributed
-    // pointer-jumping path below runs unchanged (the 100-TB shape). The
-    // count() action doubles as the cache materialization the first
-    // distributed round would have paid anyway, so the probe is free.
-    // ClustersSpec pins local-vs-distributed equality on random graphs.
-    val localMax = pairs.sparkSession.conf
-      .getOption("spark.graft.cc.localEdgeThreshold").map(_.toLong)
-      .getOrElse(4L << 20)
-    val integralIds = edges.schema("a").dataType match {
-      case org.apache.spark.sql.types.LongType |
-           org.apache.spark.sql.types.IntegerType |
-           org.apache.spark.sql.types.ShortType => true
-      case _ => false
-    }
-    // one aggregate both counts rows and proves no null endpoint (a null id
-    // would not survive a long-getter; the distributed path handles it)
-    val probe = edges.agg(count(lit(1)), count(col("a")), count(col("b"))).head()
-    val (nEdges, nonNullOk) =
-      (probe.getLong(0), probe.getLong(0) == probe.getLong(1) &&
-        probe.getLong(0) == probe.getLong(2))
-    if (integralIds && nonNullOk && nEdges <= localMax) {
-      val idType = edges.schema("a").dataType
-      val es = edges.select(col("a").cast("long"), col("b").cast("long"))
-        .collect()
+    val idType = edges.schema("a").dataType
+    for (rows <- LocalDispatch.collectLongsIfSmall(edges)) {
       edges.unpersist()
-      // union-find with path compression; final label = min node id per root
-      val parent = new java.util.HashMap[Long, Long](es.length * 2)
-      def find(x0: Long): Long = {
-        var x = x0
-        var p = parent.getOrDefault(x, x)
-        while (p != x) { x = p; p = parent.getOrDefault(x, x) }
-        var y = x0 // path compression
-        while (y != x) { val n = parent.get(y); parent.put(y, x); y = n }
-        x
-      }
-      var i = 0
-      while (i < es.length) {
-        val r = es(i)
-        val (ra, rb) = (find(r.getLong(0)), find(r.getLong(1)))
-        if (ra != rb) parent.put(ra, rb)
-        i = i + 1
-      }
-      val minOfRoot = new java.util.HashMap[Long, Long]()
-      val nodes = new java.util.TreeSet[java.lang.Long]()
-      i = 0
-      while (i < es.length) {
-        val a = es(i).getLong(0) // both directions present: a covers all nodes
-        nodes.add(a)
-        val r = find(a)
-        val m = minOfRoot.getOrDefault(r, Long.MaxValue)
-        if (a < m) minOfRoot.put(r, a)
-        i = i + 1
-      }
-      val out = new scala.collection.mutable.ArrayBuffer[(Long, Long)](nodes.size)
-      nodes.forEach(n => out += ((n.longValue(), minOfRoot.get(find(n.longValue())))))
+      val (ids, label) = replayClusters(rows.map(r => (r.getLong(0), r.getLong(1))), maxIters)
       val spark = pairs.sparkSession
       import spark.implicits._
-      return out.toSeq.toDF("id", "cluster_id")
+      return ids.indices.map(i => (ids(i), ids(label(i)))).toDF("id", "cluster_id")
         .select(col("id").cast(idType).as("id"),
           col("cluster_id").cast(idType).as("cluster_id"))
     }
@@ -683,6 +631,37 @@ object Dedup {
     }
     edges.unpersist()
     labels
+  }
+
+  /** Driver replay of the [[clusters]] round schedule over undirected
+    * `edges`: every round each node takes min(own label, neighbors'
+    * labels) and then the label of that label, all read from the previous
+    * round, stopping at the fixpoint or after `maxIters` rounds. Returns
+    * the distinct endpoints in ascending order and, per endpoint, the
+    * index of its label in that array.
+    */
+  private[ops] def replayClusters(edges: Array[(Long, Long)],
+                                  maxIters: Int): (Array[Long], Array[Int]) = {
+    val ids = (edges.map(_._1) ++ edges.map(_._2)).distinct.sorted
+    val ea = edges.map(e => java.util.Arrays.binarySearch(ids, e._1))
+    val eb = edges.map(e => java.util.Arrays.binarySearch(ids, e._2))
+    var label = Array.tabulate(ids.length)(identity)
+    var iter = 0
+    var converged = false
+    while (iter < maxIters && !converged) {
+      val nmin = label.clone()
+      var i = 0
+      while (i < ea.length) {
+        nmin(ea(i)) = math.min(nmin(ea(i)), label(eb(i)))
+        nmin(eb(i)) = math.min(nmin(eb(i)), label(ea(i)))
+        i += 1
+      }
+      val next = nmin.map(c => math.min(c, label(c)))
+      converged = java.util.Arrays.equals(next, label)
+      label = next
+      iter += 1
+    }
+    (ids, label)
   }
 
   /** The END-TO-END near-duplicate dedup pipeline — the flagship corpus op

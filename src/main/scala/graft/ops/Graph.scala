@@ -2,6 +2,7 @@ package graft.ops
 
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
+import scala.jdk.CollectionConverters._
 
 /** Link-graph analytics over the edge list [[Curation.extractLinks]]
   * produces — the corpus-level quality/spam signals a web pipeline derives
@@ -20,33 +21,6 @@ object Graph {
   /** Fixed-point scale: ranks are integers in units of 1e-9. */
   val Scale: Long = 1000000000L
 
-  /** Deterministic damped PageRank over `iters` synchronous iterations.
-    *
-    * Input: an edge list (srcCol, dstCol); duplicate edges are collapsed
-    * (the graph is simple). Nodes = src ∪ dst. Every node starts at
-    * SCALE (1.0 fixed-point; PageRank is defined up to a constant factor,
-    * so the un-normalized start avoids a SCALE div n remainder that an
-    * oracle would have to replicate). Per iteration, with damping d =
-    * dampNum/dampDen (default 85/100):
-    *
-    *   contrib(e) = rank(src) div outdeg(src)          — exact integer
-    *   rank'(v)   = (SCALE * (dampDen - dampNum)) div dampDen
-    *              + (dampNum * sum(contrib over in-edges)) div dampDen
-    *
-    * Dangling mass (nodes with no out-edges) is dropped, the standard
-    * simplification. Overflow headroom: sum(contrib) <= n * SCALE, so
-    * dampNum * sum stays within int64 for n < ~1e8 nodes per the default
-    * scale; at web scale callers lower Scale accordingly.
-    *
-    * Scale shape: the rank table is NODE-sized (tiny next to the corpus);
-    * each iteration is one join of edges->ranks on src (broadcastable if
-    * ranks fit, else a hash join co-partitioned with the edge list) + one
-    * shuffle aggregating contributions by dst. Lineage is truncated with
-    * localCheckpoint every 5 iterations (same discipline as
-    * [[Dedup.clusters]]).
-    *
-    * Returns (node, rank_int).
-    */
   /** Host of a URL: the authority between `://` and the first `/?#` —
     * the grouping key for site-level link analytics. Empty string when
     * the URL has no scheme://host prefix.
@@ -84,75 +58,36 @@ object Graph {
         sum(when(col("_src_host") =!= col("host"), 1L).otherwise(0L))
           .as("external_inlinks"))
 
+  /** Deterministic damped PageRank over `iters` synchronous iterations.
+    *
+    * Input: an edge list (srcCol, dstCol); duplicate edges are collapsed
+    * (the graph is simple). Nodes = src ∪ dst. Every node starts at
+    * SCALE (1.0 fixed-point; PageRank is defined up to a constant factor,
+    * so the un-normalized start avoids a SCALE div n remainder that an
+    * oracle would have to replicate). Per iteration, with damping d =
+    * dampNum/dampDen (default 85/100):
+    *
+    *   contrib(e) = rank(src) div outdeg(src)          — exact integer
+    *   rank'(v)   = (SCALE * (dampDen - dampNum)) div dampDen
+    *              + (dampNum * sum(contrib over in-edges)) div dampDen
+    *
+    * Dangling mass (nodes with no out-edges) is dropped, the standard
+    * simplification. Overflow headroom: sum(contrib) <= n * SCALE, so
+    * dampNum * sum stays within int64 for n < ~1e8 nodes per the default
+    * scale; at web scale callers lower Scale accordingly.
+    *
+    * Scale shape: the rank table is NODE-sized (tiny next to the corpus);
+    * each iteration is one join of edges->ranks on src (broadcastable if
+    * ranks fit, else a hash join co-partitioned with the edge list) + one
+    * shuffle aggregating contributions by dst. Lineage is truncated with
+    * localCheckpoint every 5 iterations (same discipline as
+    * [[Dedup.clusters]]).
+    *
+    * Returns (node, rank_int).
+    */
   def pageRankInt(edges: DataFrame, srcCol: String, dstCol: String,
-                  iters: Int = 4, dampNum: Long = 85, dampDen: Long = 100): DataFrame = {
-    require(iters >= 0 && dampNum >= 0 && dampNum <= dampDen && dampDen > 0)
-    val e = edges.select(col(srcCol).cast("long").as("src"),
-        col(dstCol).cast("long").as("dst"))
-      .distinct()
-      .persist()
-    val nodes = e.select(col("src").as("node"))
-      .unionByName(e.select(col("dst").as("node")))
-      .distinct()
-      .persist()
-    val outdeg = e.groupBy(col("src").as("node")).agg(count(lit(1)).as("outdeg"))
-    val baseTerm = Scale * (dampDen - dampNum) / dampDen // exact: driver-side longs
-    // SIZE-ADAPTIVE DISPATCH (the Dedup.clusters probe pattern): exact
-    // integer arithmetic replays identically on the driver — per iteration
-    // contrib(dst) = Σ rank(src) div outdeg(src) over DISTINCT edges, then
-    // base + (damp·contrib) div den, zero in-links → coalesce 0. The count
-    // doubles as the cache materialization. GraphSpec pins equality.
-    val prLocalMax = edges.sparkSession.conf
-      .getOption("spark.graft.graph.localEdgeThreshold").map(_.toLong)
-      .getOrElse(4L << 20)
-    val prProbe = e.agg(count(lit(1)), count(col("src")), count(col("dst"))).head()
-    if (prProbe.getLong(0) <= prLocalMax && (1 to 2).forall(i =>
-        prProbe.getLong(i) == prProbe.getLong(0))) {
-      val spark = edges.sparkSession
-      import spark.implicits._
-      val es = e.collect().map(r => (r.getLong(0), r.getLong(1)))
-      e.unpersist(); nodes.unpersist()
-      val deg = new java.util.HashMap[java.lang.Long, java.lang.Long]()
-      val rank = new java.util.HashMap[java.lang.Long, java.lang.Long]()
-      es.foreach { case (s, d) =>
-        deg.merge(s, 1L, (a, b) => a + b)
-        rank.putIfAbsent(s, Scale); rank.putIfAbsent(d, Scale)
-      }
-      for (_ <- 0 until iters) {
-        val in = new java.util.HashMap[java.lang.Long, java.lang.Long]()
-        es.foreach { case (s, d) =>
-          in.merge(d, rank.get(s).longValue() / deg.get(s).longValue(),
-            (a, b) => a + b)
-        }
-        rank.replaceAll((n, _) => {
-          val c = in.get(n)
-          baseTerm + dampNum * (if (c eq null) 0L else c.longValue()) / dampDen
-        })
-      }
-      val out = new scala.collection.mutable.ArrayBuffer[(Long, Long)](rank.size)
-      rank.forEach((k, v) => out += ((k.longValue(), v.longValue())))
-      return out.toSeq.toDF("node", "rank_int")
-    }
-    var ranks = nodes.withColumn("rank_int", lit(Scale))
-    // eager localCheckpoint per iteration: materializes AND cuts lineage
-    // to an RDD leaf in one job — without it AQE recompiles a plan that
-    // grows every iteration (the bfsDepth/hitsInt pathology)
-    for (_ <- 0 until iters) {
-      val contribs = e
-        .join(ranks.withColumnRenamed("node", "src"), Seq("src"))
-        .join(outdeg.withColumnRenamed("node", "src"), Seq("src"))
-        .groupBy(col("dst").as("node"))
-        .agg(sum(expr("rank_int div outdeg")).as("_in"))
-      ranks = nodes.join(contribs, Seq("node"), "left")
-        .select(col("node"),
-          (lit(baseTerm) +
-            expr(s"(${dampNum}L * coalesce(_in, 0L)) div ${dampDen}L")).as("rank_int"))
-        .localCheckpoint()
-    }
-    e.unpersist()
-    nodes.unpersist()
-    ranks
-  }
+                  iters: Int = 4, dampNum: Long = 85, dampDen: Long = 100): DataFrame =
+    teleportRank(edges, srcCol, dstCol, None, iters, dampNum, dampDen)
 
   /** Personalized PageRank — [[pageRankInt]] with the teleport mass
     * restricted to a SEED set (topic-/site-conditioned authority: "which
@@ -173,6 +108,14 @@ object Graph {
                               iters: Int = 4, dampNum: Long = 85,
                               dampDen: Long = 100): DataFrame = {
     require(seeds.nonEmpty, "need at least one seed node")
+    teleportRank(edges, srcCol, dstCol, Some(seeds), iters, dampNum, dampDen)
+  }
+
+  /** The schedule of [[personalizedPageRankInt]]; `seeds = None` makes
+    * every node a seed, which is [[pageRankInt]]. */
+  private def teleportRank(edges: DataFrame, srcCol: String, dstCol: String,
+                           seeds: Option[Seq[Long]], iters: Int, dampNum: Long,
+                           dampDen: Long): DataFrame = {
     require(iters >= 0 && dampNum >= 0 && dampNum <= dampDen && dampDen > 0)
     val e = edges.select(col(srcCol).cast("long").as("src"),
         col(dstCol).cast("long").as("dst"))
@@ -181,23 +124,17 @@ object Graph {
     val nodes = e.select(col("src").as("node"))
       .unionByName(e.select(col("dst").as("node")))
       .distinct()
-      .withColumn("_seed", col("node").isin(seeds.map(Long.box): _*))
+      .withColumn("_seed", seeds.fold(lit(true))(ss => col("node").isin(ss.map(Long.box): _*)))
       .persist()
     val outdeg = e.groupBy(col("src").as("node")).agg(count(lit(1)).as("outdeg"))
-    val baseTerm = Scale * (dampDen - dampNum) / dampDen
-    // SIZE-ADAPTIVE DISPATCH — identical integer schedule to the
-    // pageRankInt local path, with teleport mass restricted to the seeds
-    val pprLocalMax = edges.sparkSession.conf
-      .getOption("spark.graft.graph.localEdgeThreshold").map(_.toLong)
-      .getOrElse(4L << 20)
-    val pprProbe = e.agg(count(lit(1)), count(col("src")), count(col("dst"))).head()
-    if (pprProbe.getLong(0) <= pprLocalMax && (1 to 2).forall(i =>
-        pprProbe.getLong(i) == pprProbe.getLong(0))) {
+    val baseTerm = Scale * (dampDen - dampNum) / dampDen // exact: driver-side longs
+    // local replay: the integer schedule of the loop below, op for op
+    for (rows <- LocalDispatch.collectIfSmall(e)) {
       val spark = edges.sparkSession
       import spark.implicits._
-      val es = e.collect().map(r => (r.getLong(0), r.getLong(1)))
+      val es = rows.map(r => (r.getLong(0), r.getLong(1)))
       e.unpersist(); nodes.unpersist()
-      val seedSet = seeds.toSet
+      val seedSet: Long => Boolean = seeds.fold((_: Long) => true)(_.toSet)
       val deg = new java.util.HashMap[java.lang.Long, java.lang.Long]()
       val rank = new java.util.HashMap[java.lang.Long, java.lang.Long]()
       es.foreach { case (s, d) =>
@@ -223,6 +160,9 @@ object Graph {
     }
     var ranks = nodes.withColumn("rank_int",
       when(col("_seed"), lit(Scale)).otherwise(lit(0L)))
+    // eager localCheckpoint per iteration: materializes AND cuts lineage
+    // to an RDD leaf in one job — without it AQE recompiles a plan that
+    // grows every iteration (the bfsDepth/hitsInt pathology)
     for (_ <- 0 until iters) {
       val contribs = e
         .join(ranks.select(col("node").as("src"), col("rank_int")), Seq("src"))
@@ -293,20 +233,11 @@ object Graph {
         .select(col("node"),
           expr(s"(${scale}L * coalesce(_s, 0L)) div _m").as(outCol))
     }
-    // SIZE-ADAPTIVE DISPATCH — the fixed-point rescale schedule is pure
-    // int64 arithmetic, replayed locally under the driver bound: per
-    // iteration rawAuth(v) = Σ hub(u) over distinct in-edges, every node's
-    // auth = (scale·coalesce(raw,0)) div max(max(raw),1), then the hub
-    // side from the fresh auths. GraphSpec pins equality.
-    val hLocalMax = edges.sparkSession.conf
-      .getOption("spark.graft.graph.localEdgeThreshold").map(_.toLong)
-      .getOrElse(4L << 20)
-    val hProbe = e.agg(count(lit(1)), count(col("src")), count(col("dst"))).head()
-    if (hProbe.getLong(0) <= hLocalMax && (1 to 2).forall(i =>
-        hProbe.getLong(i) == hProbe.getLong(0))) {
+    // local replay: the rescale schedule of the loop below, op for op
+    for (rows <- LocalDispatch.collectIfSmall(e)) {
       val spark = edges.sparkSession
       import spark.implicits._
-      val es = e.collect().map(r => (r.getLong(0), r.getLong(1)))
+      val es = rows.map(r => (r.getLong(0), r.getLong(1)))
       e.unpersist(); nodes.unpersist()
       val ns = (es.map(_._1) ++ es.map(_._2)).distinct
       val hub = new java.util.HashMap[java.lang.Long, java.lang.Long]()
@@ -460,18 +391,12 @@ object Graph {
     // eager localCheckpoint: materializes AND cuts lineage to an RDD leaf
     val seed = seeds.select(col(seedCol).cast("long").as("node"))
       .distinct().localCheckpoint()
-    // SIZE-ADAPTIVE DISPATCH (the Dedup.clusters probe pattern): same
-    // layered BFS with the same depth cap, one driver pass
-    val bfsLocalMax = edges.sparkSession.conf
-      .getOption("spark.graft.graph.localEdgeThreshold").map(_.toLong)
-      .getOrElse(4L << 20)
-    val bfsProbe = e.agg(count(lit(1)), count(col("src")), count(col("dst"))).head()
-    if (bfsProbe.getLong(0) <= bfsLocalMax && (1 to 2).forall(i =>
-        bfsProbe.getLong(i) == bfsProbe.getLong(0))) {
+    // local replay: the same layered BFS with the same depth cap
+    for (rows <- LocalDispatch.collectIfSmall(e)) {
       val spark = edges.sparkSession
       import spark.implicits._
       val adj = new java.util.HashMap[java.lang.Long, scala.collection.mutable.ArrayBuffer[Long]]()
-      e.collect().foreach { r =>
+      rows.foreach { r =>
         adj.computeIfAbsent(r.getLong(0),
           _ => new scala.collection.mutable.ArrayBuffer[Long]()) += r.getLong(1)
       }
@@ -518,27 +443,6 @@ object Graph {
     out
   }
 
-  /** k-core of the UNDIRECTED simple graph under `edges` (direction and
-    * duplicate/self edges dropped): iteratively peel every node whose
-    * degree in the surviving subgraph is < k until fixpoint — the classic
-    * link-farm / well-connectedness signal (spam rings and boilerplate
-    * nav clusters live in high cores; genuine long-tail content in low
-    * ones). Returns the surviving nodes with their WITHIN-CORE degree.
-    *
-    * Each peel round is deterministic (drop ALL underdegree nodes
-    * simultaneously), so round i's subgraph is a pure function of the
-    * input — an external engine unrolling the same peels reproduces the
-    * result exactly; extra rounds after fixpoint are identity, so any
-    * unroll depth >= the convergence round matches.
-    *
-    * Scale shape: rounds are edge-sized joins against the (node-bounded)
-    * keep-list — one degree aggregate + two semi-joins each —
-    * `localCheckpoint`ed per round to cut lineage; the convergence test
-    * rides the checkpointed leaf (a cheap count, not a recompute).
-    * Peeling needs at most |V| rounds; real web graphs converge in tens.
-    * `maxRounds` caps the cost — stopping early yields the same rows an
-    * equally-deep unroll produces (document the depth when comparing).
-    */
   /** Newman modularity Q of a node→community assignment over the
     * undirected simple graph:
     *
@@ -655,6 +559,27 @@ object Graph {
       when(dx > 0 && dy > 0, num / (sqrt(dx) * sqrt(dy))).as("r"))
   }
 
+  /** k-core of the UNDIRECTED simple graph under `edges` (direction and
+    * duplicate/self edges dropped): iteratively peel every node whose
+    * degree in the surviving subgraph is < k until fixpoint — the classic
+    * link-farm / well-connectedness signal (spam rings and boilerplate
+    * nav clusters live in high cores; genuine long-tail content in low
+    * ones). Returns the surviving nodes with their WITHIN-CORE degree.
+    *
+    * Each peel round is deterministic (drop ALL underdegree nodes
+    * simultaneously), so round i's subgraph is a pure function of the
+    * input — an external engine unrolling the same peels reproduces the
+    * result exactly; extra rounds after fixpoint are identity, so any
+    * unroll depth >= the convergence round matches.
+    *
+    * Scale shape: rounds are edge-sized joins against the (node-bounded)
+    * keep-list — one degree aggregate + two semi-joins each —
+    * `localCheckpoint`ed per round to cut lineage; the convergence test
+    * rides the checkpointed leaf (a cheap count, not a recompute).
+    * Peeling needs at most |V| rounds; real web graphs converge in tens.
+    * `maxRounds` caps the cost — stopping early yields the same rows an
+    * equally-deep unroll produces (document the depth when comparing).
+    */
   def kCore(edges: DataFrame, srcCol: String, dstCol: String, k: Int,
             maxRounds: Int = 50): DataFrame = {
     require(k >= 1, "k must be >= 1")
@@ -667,18 +592,11 @@ object Graph {
     var cur = simple
       .unionByName(simple.select(col("b").as("a"), col("a").as("b")))
       .localCheckpoint()
-    var prevEdges = cur.count()
-    // SIZE-ADAPTIVE DISPATCH — same simultaneous peel with the same
-    // round cap and stop condition, one driver pass
-    val kcLocalMax = edges.sparkSession.conf
-      .getOption("spark.graft.graph.localEdgeThreshold").map(_.toLong)
-      .getOrElse(4L << 20)
-    val kcProbe = cur.agg(count(col("a")), count(col("b"))).head()
-    if (prevEdges <= kcLocalMax && kcProbe.getLong(0) == prevEdges &&
-        kcProbe.getLong(1) == prevEdges) {
+    // local replay: the same simultaneous peel, round cap and stop test
+    for (rows <- LocalDispatch.collectIfSmall(cur)) {
       val spark = edges.sparkSession
       import spark.implicits._
-      var es = cur.collect().map(r => (r.getLong(0), r.getLong(1)))
+      var es = rows.map(r => (r.getLong(0), r.getLong(1)))
       var prev = es.length.toLong
       var rd = 0
       var dn = prev == 0L
@@ -696,6 +614,7 @@ object Graph {
         .map { case (n, o) => (n, o.length.toLong) }
         .toDF("node", "core_degree")
     }
+    var prevEdges = cur.count()
     var round = 0
     var done = prevEdges == 0L
     while (!done && round < maxRounds) {
@@ -740,21 +659,9 @@ object Graph {
         col(dstCol).cast("long").as("dst"), col(wCol).cast("long").as("w"))
       .groupBy(col("src"), col("dst")).agg(min(col("w")).as("w"))
       .localCheckpoint()
-    // SIZE-ADAPTIVE DISPATCH (the Dedup.clusters probe pattern): the edge
-    // table is already a materialized leaf, so the count is a cheap scan.
-    // Under the driver bound, the SAME synchronous capped-round relaxation
-    // runs locally (identical math: per round every edge relaxes off the
-    // previous round's distances, min-merge, early exit on no change) —
-    // one driver pass instead of maxRounds join jobs. Past the bound the
-    // distributed loop below is unchanged. GraphSpec pins equality.
-    val localMax = spark.conf
-      .getOption("spark.graft.graph.localEdgeThreshold").map(_.toLong)
-      .getOrElse(4L << 20)
-    val eProbe = e.agg(count(lit(1)), count(col("src")), count(col("dst")),
-      count(col("w"))).head()
-    if (eProbe.getLong(0) <= localMax && (1 to 3).forall(i =>
-        eProbe.getLong(i) == eProbe.getLong(0))) {
-      val es = e.collect().map(r => (r.getLong(0), r.getLong(1), r.getLong(2)))
+    // local replay: the same capped synchronous relaxation as the loop below
+    for (rows <- LocalDispatch.collectIfSmall(e)) {
+      val es = rows.map(r => (r.getLong(0), r.getLong(1), r.getLong(2)))
       // boxed maps on purpose: absence must read as null, never unbox to 0
       val d = new java.util.HashMap[java.lang.Long, java.lang.Long]()
       sources.distinct.foreach(s => d.put(s, 0L))
@@ -812,7 +719,8 @@ object Graph {
     * the lightest; self-loops drop. Per round: two label joins stamp
     * components, a min-of-struct per component picks edges (ties
     * impossible by contract), [[graft.ops.Dedup.clusters]] contracts the
-    * chosen component graph, labels update by one join. Every
+    * chosen component graph to its fixpoint (no round cap), labels update
+    * by one join. Every
     * intermediate is localCheckpoint-ed (the iterative-op lineage
     * discipline).
     *
@@ -830,24 +738,12 @@ object Graph {
       .where(col("u") =!= col("v"))
       .groupBy(col("u"), col("v")).agg(min(col("w")).as("w"))
       .localCheckpoint()
-    // SIZE-ADAPTIVE DISPATCH (the Dedup.clusters probe pattern): e0 is a
-    // materialized leaf, the count a cheap scan. Under the driver bound the
-    // SAME round structure runs locally — per round each component's
-    // lightest (w, u, v)-ordered outgoing edge is chosen, components
-    // contract, capped at maxRounds — so the selected forest is identical
-    // edge-for-edge (including the tie-ordering and cap semantics). Past
-    // the bound the distributed loop below is unchanged. GraphSpec pins
-    // equality.
-    val localMaxB = edges.sparkSession.conf
-      .getOption("spark.graft.graph.localEdgeThreshold").map(_.toLong)
-      .getOrElse(4L << 20)
-    val bProbe = e0.agg(count(lit(1)), count(col("u")), count(col("v")),
-      count(col("w"))).head()
-    if (bProbe.getLong(0) <= localMaxB && (1 to 3).forall(i =>
-        bProbe.getLong(i) == bProbe.getLong(0))) {
-      val spark2 = edges.sparkSession
-      import spark2.implicits._
-      val es = e0.collect().map(r => (r.getLong(0), r.getLong(1), r.getLong(2)))
+    // local replay: the same rounds, (w, u, v) tie order and caps as the
+    // loop below, so the forest is identical edge-for-edge
+    for (rows <- LocalDispatch.collectIfSmall(e0)) {
+      val spark = edges.sparkSession
+      import spark.implicits._
+      val es = rows.map(r => (r.getLong(0), r.getLong(1), r.getLong(2)))
       val compM = new java.util.HashMap[Long, Long]()
       es.foreach { case (u, v, _) =>
         compM.putIfAbsent(u, u); compM.putIfAbsent(v, v)
@@ -872,33 +768,14 @@ object Graph {
           val chosen = new java.util.TreeSet[(Long, Long, Long)](
             Ordering.Tuple3[Long, Long, Long])
           best.values.forEach(e => chosen.add(e))
-          chosen.forEach(e => mstB += e)
-          // contract: min-label CC over the chosen component graph
-          val parent = new java.util.HashMap[Long, Long]()
-          def find(x0: Long): Long = {
-            var x = x0
-            var p = parent.getOrDefault(x, x)
-            while (p != x) { x = p; p = parent.getOrDefault(x, x) }
-            var y = x0
-            while (y != x) { val n = parent.get(y); parent.put(y, x); y = n }
-            x
-          }
-          chosen.forEach { e =>
-            val (ra, rb) = (find(compM.get(e._1)), find(compM.get(e._2)))
-            if (ra != rb) parent.put(ra, rb)
-          }
-          val minOfRoot = new java.util.HashMap[Long, Long]()
-          chosen.forEach { e =>
-            Seq(compM.get(e._1), compM.get(e._2)).foreach { c =>
-              val root = find(c)
-              val m = minOfRoot.getOrDefault(root, Long.MaxValue)
-              if (c < m) minOfRoot.put(root, c)
-            }
-          }
-          compM.replaceAll((_, c) => {
-            val root = find(c)
-            if (minOfRoot.containsKey(root)) minOfRoot.get(root) else c
-          })
+          mstB ++= chosen.asScala
+          // contract: the clusters rounds over the chosen component graph,
+          // run to the fixpoint as in the loop below
+          val (cs, label) = Dedup.replayClusters(chosen.asScala.toArray
+            .map(e => (compM.get(e._1), compM.get(e._2))), Int.MaxValue)
+          val merged = new java.util.HashMap[Long, Long]()
+          cs.indices.foreach(i => merged.put(cs(i), cs(label(i))))
+          compM.replaceAll((_, c) => merged.getOrDefault(c, c))
           r += 1
         }
       }
@@ -935,7 +812,10 @@ object Graph {
           .join(comp.select(col("node").as("v"), col("comp").as("cb")),
             Seq("v"))
           .select(col("ca").as("id_a"), col("cb").as("id_b"))
-        val merged = graft.ops.Dedup.clusters(compEdges, "id_a", "id_b")
+        // no round cap: a chosen forest deeper than the cap would stay
+        // half-contracted and its edges would be chosen again next round
+        val merged = graft.ops.Dedup.clusters(compEdges, "id_a", "id_b",
+          maxIters = Int.MaxValue)
         comp = comp
           .join(merged.select(col("id").as("comp"), col("cluster_id")),
             Seq("comp"), "left")

@@ -80,6 +80,11 @@ object Similarity {
     * the same uniform hash, so the stratum is itself a uniform 1/p
     * subsample). A corpus too small to fill `sampleSize` from the stratum
     * falls back to the unfiltered draw — cheap exactly when it happens.
+    *
+    * `sampleModulus` (p, default 64) is OUTPUT-DEFINING, not a tuning
+    * knob: it selects the stratum, so whenever the stratum fills
+    * `sampleSize` a different p draws different rows and trains different
+    * centroids. OptR06Spec pins the ids drawn at the default.
     */
   private[ops] def trainCentroidsSampled(corpus: DataFrame, idCol: String, vecCol: String,
                                          nCentroids: Int, sampleSize: Int, iters: Int,

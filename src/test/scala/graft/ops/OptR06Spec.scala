@@ -313,17 +313,37 @@ class OptR06Spec extends SparkSpec {
     assert(expSample.nonEmpty) // draw defined; fallback exercised above
   }
 
+  test("trainCentroidsSampled: the default sampleModulus (64) defines the drawn rows") {
+    // one-dimensional vectors carry their id, and iters = 0 returns the
+    // first nCentroids drawn rows (hash order) unchanged as centroids
+    val corpus = (0L until 4096L).map(i => (i, Seq(i.toFloat))).toDF("id", "v")
+    def drawn(sampleModulus: Int): Seq[Long] =
+      Similarity.trainCentroidsSampled(corpus, "id", "v", nCentroids = 8,
+        sampleSize = 8, iters = 0, sampleModulus = sampleModulus).map(_.head.toLong).toSeq
+    val atDefault = Similarity.trainCentroidsSampled(corpus, "id", "v",
+      nCentroids = 8, sampleSize = 8, iters = 0).map(_.head.toLong).toSeq
+    assert(atDefault == Seq(411L, 2024L, 2164L, 3289L, 1385L, 1052L, 2678L, 1927L))
+    assert(atDefault == drawn(64))
+    val residues = corpus.where(col("id").isin(atDefault: _*))
+      .select(pmod(xxhash64(col("id")), lit(64))).distinct().collect().map(_.getLong(0))
+    assert(residues.toSeq == Seq(0L), "every drawn id is in the residue-0 stratum")
+    assert(drawn(16) != atDefault, "the modulus changes which rows are drawn")
+  }
+
   // ---- size-adaptive local dispatch ≡ distributed (round-6) ----
 
-  /** Run `body` with the local-dispatch thresholds forced to 0 (every graph
-    * takes the distributed path), restoring the confs after.
+  /** Run `body` with the local-dispatch threshold forced to 0 (every graph
+    * takes the distributed path), restoring the conf after.
     */
   private def forcedDistributed[T](body: => T): T = {
-    val keys = Seq("spark.graft.cc.localEdgeThreshold",
-      "spark.graft.graph.localEdgeThreshold")
-    keys.foreach(k => spark.conf.set(k, "0"))
-    try body finally keys.foreach(k => spark.conf.unset(k))
+    spark.conf.set(LocalDispatch.ThresholdKey, "0")
+    try body finally spark.conf.unset(LocalDispatch.ThresholdKey)
   }
+
+  /** Rows as sets of nullable values — the gate's decline inputs carry
+    * null and string ids that no typed getter reads. */
+  private def rowSet(df: org.apache.spark.sql.DataFrame): Set[Seq[Any]] =
+    df.collect().map(_.toSeq).toSet
 
   test("clusters: local union-find ≡ distributed pointer jumping on random graphs") {
     val rnd = new scala.util.Random(42)
@@ -342,6 +362,22 @@ class OptR06Spec extends SparkSpec {
       }
       assert(local == dist, s"trial $trial")
     }
+    // the round cap binds on both paths: 3 rounds leave most of a 64-node
+    // path short of label 0, 7 rounds reach the fixpoint
+    val path = (0L until 63L).map(i => (i, i + 1)).toDF("id_a", "id_b")
+    for (cap <- Seq(3, 7)) {
+      val local = rowSet(Dedup.clusters(path, maxIters = cap))
+      val dist = forcedDistributed(rowSet(Dedup.clusters(path, maxIters = cap)))
+      assert(local == dist, s"64-node path, maxIters=$cap")
+      assert(local.count(_(1) != 0L) == (if (cap == 3) 56 else 0), s"maxIters=$cap")
+    }
+    // decline rule: a null endpoint or string ids take the distributed path
+    val withNull = Seq[(java.lang.Long, java.lang.Long)]((1L, 2L), (2L, null), (3L, 4L))
+      .toDF("id_a", "id_b")
+    val strings = Seq(("a", "b"), ("b", "c"), ("x", "y")).toDF("id_a", "id_b")
+    for ((name, pairs) <- Seq("null endpoint" -> withNull, "string ids" -> strings))
+      assert(rowSet(Dedup.clusters(pairs)) ==
+        forcedDistributed(rowSet(Dedup.clusters(pairs))), name)
   }
 
   test("ssspInt: local relaxation ≡ distributed, including the round cap") {
@@ -375,6 +411,16 @@ class OptR06Spec extends SparkSpec {
         .map(r => (r.getLong(0), r.getLong(1), r.getLong(2))).toSet
     }
     assert(local == dist)
+    // weights fall along a 2,048-node path, so round 1 chooses all 2,047
+    // edges as one chain, deeper than the 1,023 hops clusters' default cap
+    // of 10 pointer-jumping rounds reaches: both paths must contract it
+    // fully or the next round re-chooses (and re-emits) its edges
+    val n = 2048L
+    val path = (0L until n - 1).map(i => (i, i + 1, n - i))
+    def forest() = Graph.boruvkaMst(path.toDF("s", "d", "w"), "s", "d", "w").collect()
+      .map(r => (r.getLong(0), r.getLong(1), r.getLong(2))).toSeq.sorted
+    assert(forest() == path, "2,048-node path, local")
+    assert(forcedDistributed(forest()) == path, "2,048-node path, distributed")
   }
 
   test("pageRankInt / personalizedPageRankInt / hitsInt: local ≡ distributed") {
@@ -388,6 +434,11 @@ class OptR06Spec extends SparkSpec {
         .map(r => r.getLong(0) -> r.getLong(1)).toMap
     }
     assert(prL == prD, "pageRankInt")
+    val withNull = Seq[(java.lang.Long, java.lang.Long)]((1L, 2L), (2L, 3L), (3L, null))
+      .toDF("src", "dst")
+    assert(rowSet(Graph.pageRankInt(withNull, "src", "dst")) ==
+      forcedDistributed(rowSet(Graph.pageRankInt(withNull, "src", "dst"))),
+      "pageRankInt, null endpoint")
     val pprL = Graph.personalizedPageRankInt(edges, "src", "dst",
       seeds = Seq(1L, 3L), iters = 3).collect()
       .map(r => r.getLong(0) -> r.getLong(1)).toMap
@@ -440,6 +491,10 @@ class OptR06Spec extends SparkSpec {
         .map(r => (r.getLong(0), r.getLong(1), r.getBoolean(2))).toSet
     }
     assert(lc == dc, "resolveCanonicalChains")
+    val named = Seq(("c", "b"), ("b", "a"), ("x", "y"), ("y", "x")).toDF("f", "t")
+    assert(rowSet(Curation.resolveCanonicalChains(named, "f", "t")) ==
+      forcedDistributed(rowSet(Curation.resolveCanonicalChains(named, "f", "t"))),
+      "resolveCanonicalChains, string ids")
   }
 
   test("stationaryDistribution: local power iteration ≡ distributed") {
